@@ -85,6 +85,15 @@ class LinearQualityModel:
                  .withColumn(pred_col, (F.col(prob_col) > 0.5).cast("int"))
 
 
+def _segment_sum(indptr, values):
+    """Per-row sums of CSR ``values`` — exact for empty rows anywhere,
+    trailing ones included (``np.add.reduceat`` cannot express an empty
+    last segment)."""
+    n = len(indptr) - 1
+    return np.bincount(np.repeat(np.arange(n), np.diff(indptr)),
+                       weights=values, minlength=n)
+
+
 def _fit_logistic_driver(x_indptr, x_indices, x_values, y, n_features,
                          reg_param: float, max_iter: int):
     """L-BFGS (two-loop recursion, Armijo backtracking) on the standard
@@ -101,15 +110,7 @@ def _fit_logistic_driver(x_indptr, x_indices, x_values, y, n_features,
 
     def f_g(wb):
         w, b = wb[:-1], wb[-1]
-        zseg = x_values * w[x_indices]
-        if len(zseg):
-            # reduceat rejects offsets == len (trailing all-zero rows);
-            # clamp, then zero empty rows via the counts mask below
-            z = np.add.reduceat(zseg, np.minimum(x_indptr[:-1],
-                                                 len(zseg) - 1))
-        else:
-            z = np.zeros(n)
-        z = np.where(counts > 0, z, 0.0) + b
+        z = _segment_sum(x_indptr, x_values * w[x_indices]) + b
         # stable log(1+exp(-yz)) with y in {0,1}: loss = log1p(exp(z)) - y*z
         loss = np.logaddexp(0.0, z) - yv * z
         p = 1.0 / (1.0 + np.exp(-z))

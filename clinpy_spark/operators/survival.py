@@ -26,15 +26,20 @@ no join wider than the per-time table.
 
 from __future__ import annotations
 
+import functools
+import itertools
+import math
+import pickle
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 # Cap on per-event-time grid rows the Newton fitters may pull to the
 # driver (r13 verdict #2): cells are design-bounded but DISTINCT EVENT
-# TIMES come from the data, so past this cap the fitters keep the
-# distributed per-step recurrence instead of collecting a data-sized
-# grid. 100k rows of 4-8 numerics is ~a few MB — far under any
+# TIMES come from the data, so past this cap the fitters run the same
+# kernel per partition (:func:`_grid_runner`) instead of collecting a
+# data-sized grid. 100k rows of 4-8 numerics is ~a few MB — far under any
 # maxResultSize — while every declared fixture's grid is ~1.5k rows.
 _GRID_DRIVER_MAX = 100_000
 
@@ -917,75 +922,129 @@ def _binary_event_grid(
     )
 
 
-def _newton_beta(spark, grid: DataFrame, iterations: int) -> DataFrame:
-    """``iterations`` Newton-Raphson steps on the Breslow partial
-    likelihood over a binary-covariate grid: 1-row (beta) DataFrame,
-    NULL on zero information at any step.
+def _exp(v: float) -> float:
+    """``math.exp`` with the overflow behaviour of Spark's ``exp``: inf,
+    never OverflowError, so a divergent Newton step turns into NaN
+    moments and a NULL emission instead of a driver crash."""
+    try:
+        return math.exp(v)
+    except OverflowError:
+        return math.inf
 
-    The steps iterate in the DRIVER over the collected grid (the
-    batch-4/5 factoring of the GLM family): the grid is BOUNDED by the
-    statistical design (per-event-time cells — the distributed work is
-    building it, which stays in Spark), while the previous chained
-    crossJoin(broadcast(beta)) recurrence paid one broadcast-exchange
-    job plus one grid aggregate per step — ~0.8s of pure scheduling per
-    fit at sf0.1 across the five cox/finegray callers. Arithmetic is
-    replicated per-row in collect order with the same expression
-    shapes (s1 = n1*e^b; s0 = (n-n1)+s1; u += d1 - d*frac;
-    i += d*frac*(1-frac)), so the float stream matches the previous
-    single-partition aggregate's operand order; emission stays behind
-    the callers' round-6 as before.
 
-    The driver loop only engages when the grid is provably bounded
-    (r13 verdict #2): distinct event times come from the data, so past
-    ``_GRID_DRIVER_MAX`` rows the steps fall back to the pre-r13
-    distributed recurrence (one grid aggregate + broadcast crossJoin
-    per step) and nothing data-sized reaches the driver."""
-    import math
+def _round(x: float, digits: int | None) -> float:
+    """Driver-side emission rounding; ``digits=None`` keeps the raw
+    double (the float-stream audits compare unrounded values)."""
+    if digits is None:
+        return float(x)
+    return round(float(x), digits) + 0.0
 
-    rows = grid.select("n", "n1", "d", "d1").take(_GRID_DRIVER_MAX + 1)
-    if len(rows) > _GRID_DRIVER_MAX:
-        beta_df = spark.range(1).select(F.lit(0.0).alias("beta"))
-        for _ in range(iterations):
-            j = grid.crossJoin(F.broadcast(beta_df))
-            s1c = F.col("n1") * F.exp(F.col("beta"))
-            s0c = (F.col("n") - F.col("n1")) + s1c
-            fracc = s1c / s0c
-            u_t = F.col("d1") - F.col("d") * fracc
-            i_t = F.col("d") * fracc * (1 - fracc)
-            # agg (not groupBy) so an event-free cohort still yields
-            # the 1-row NULL result instead of vanishing
-            stp = j.agg(
-                F.max("beta").alias("beta"),
-                F.sum(u_t).alias("__u"), F.sum(i_t).alias("__i"))
-            beta_df = stp.select(
-                F.when(
-                    F.col("__i") > 0,
-                    F.col("beta") + F.col("__u") / F.col("__i"),
-                ).alias("beta")
-            )
-        return beta_df
-    beta: float | None = 0.0
-    for _ in range(iterations):
-        if beta is None:
+
+def _grid_runner(grid: DataFrame, key=("__t",), cols=("n", "n1", "d", "d1"),
+                 range_key=None):
+    """The one collect-or-distribute switch of the survival Newton fits:
+    returns ``run(kernel, *args)``, which evaluates ``kernel(rows,
+    *args)`` — a plain-Python left-to-right reduction returning a flat
+    tuple of sums — over the grid's ``cols`` rows (key columns appended
+    when not among them) in ascending ``key`` order.
+
+    A grid of at most ``_GRID_DRIVER_MAX`` rows is collected once and
+    sorted by ``key`` before any float touches it (collect order
+    depends on the partition layout — r13 verdict #1), and every call
+    runs the kernel over it on the driver. Distinct event times come
+    from the data, so a larger grid never reaches the driver: it is
+    range-partitioned on ``range_key`` (default ``key``; a kernel that
+    reduces per time passes the time column so one time never spans
+    two partitions), sorted within partitions and checkpointed once;
+    every call then runs the SAME kernel per partition through
+    mapInPandas and sums the partials on the driver in partition-index
+    order (= key order)."""
+    names = list(dict.fromkeys([*cols, *key]))
+    sel = grid.select(*names)
+    raw = sel.take(_GRID_DRIVER_MAX + 1)
+    if len(raw) <= _GRID_DRIVER_MAX:
+        ki = [names.index(k) for k in key]
+        rows = sorted(map(tuple, raw),
+                      key=lambda r: [(r[i] is not None, r[i]) for i in ki])
+        return lambda kernel, *args: kernel(rows, *args)
+    parts = (sel.repartitionByRange(*(range_key or key))
+             .sortWithinPartitions(*key).localCheckpoint())
+
+    def run(kernel, *args):
+        def per_partition(batches):
+            import pandas as pd
+            from pyspark import TaskContext
+
+            rows = [r for pdf in batches
+                    for r in zip(*(pdf[c].tolist() for c in names))]
+            yield pd.DataFrame({
+                "pid": [TaskContext.get().partitionId()],
+                "out": [pickle.dumps(kernel(rows, *args))]})
+
+        got = parts.mapInPandas(per_partition, "pid int, out binary").collect()
+        return functools.reduce(
+            lambda acc, p: tuple(a + b for a, b in zip(acc, p)),
+            [pickle.loads(r.out) for r in sorted(got, key=lambda r: r.pid)])
+
+    return run
+
+
+def _binary_moments(rows, beta: float) -> tuple:
+    """The binary-covariate Newton kernel: (U, I, n_events) at ``beta``
+    over grid rows (n, n1, d, d1, ...) in key order. With x in {0,1}
+    the risk-set exponential moments collapse to S1 = n1 e^b and
+    S0 = (n - n1) + S1, so
+        U = sum_t [d1 - d * S1/S0],  I = sum_t d * (S1/S0) * (1 - S1/S0)
+    in the oracle CTEs' operand association."""
+    eb = _exp(beta)
+    u = 0.0
+    info = 0.0
+    n_events = 0
+    for n, n1, d, d1, *_ in rows:
+        s1 = n1 * eb
+        s0 = (n - n1) + s1
+        frac = s1 / s0
+        u += d1 - d * s1 / s0
+        info += d * frac * (1 - frac)
+        n_events += d
+    return u, info, n_events
+
+
+def _binary_fit(run, iterations: int) -> tuple:
+    """``iterations`` Newton-Raphson steps b <- b + U/I from b = 0 on
+    the Breslow partial likelihood over a binary-covariate grid, every
+    step one :func:`_binary_moments` pass through ``run`` (a
+    :func:`_grid_runner`): (beta, information at beta, n_events). beta
+    is None when a step's information is not positive (empty or
+    constant-covariate grid, complete separation, or a divergent step's
+    inf -> NaN moments)."""
+    beta = 0.0
+    for step in range(iterations + 1):
+        u, info, n_events = run(_binary_moments, beta)
+        if step == iterations:
             break
-        u = 0.0
-        i = 0.0
-        try:
-            eb = math.exp(beta)
-        except OverflowError:
-            # mirror the distributed plan's F.exp: inf -> nan moments
-            # -> NULL beta, never a driver crash (divergent step on a
-            # separated / rare-exposure cohort)
-            eb = math.inf
-        for r in rows:
-            s1 = r[1] * eb
-            frac = s1 / ((r[0] - r[1]) + s1)
-            u += r[3] - r[2] * frac
-            i += r[2] * frac * (1 - frac)
-        # empty grid: the old agg yielded NULL sums -> NULL beta
-        beta = beta + u / i if (rows and i > 0) else None
-    return spark.range(1).select(
-        F.lit(beta).cast("double").alias("beta"))
+        if not info > 0:
+            return None, info, n_events
+        beta = beta + u / info
+    return beta, info, n_events
+
+
+def _emit_binary_fit(counts: DataFrame, beta, info, n_events,
+                     digits: int | None = 6) -> DataFrame:
+    """The one emission of the binary-covariate Newton fits: 1 row
+    (beta, hr, se, wald_chi2, n_events, *counts columns) from the fit's
+    driver scalars over the caller's 1-row ``counts`` aggregate.
+    se = 1/sqrt(I(b)), wald_chi2 = b^2 * I(b); all four are NULL unless
+    beta exists and the information at it is positive."""
+    if beta is not None and info > 0:
+        stats = [F.lit(_round(v, digits)) for v in (
+            beta, math.exp(beta), 1 / math.sqrt(info), beta * beta * info)]
+    else:
+        stats = [F.lit(None).cast("double")] * 4
+    names = ("beta", "hr", "se", "wald_chi2")
+    return counts.select(
+        *[c.alias(n) for c, n in zip(stats, names)],
+        F.lit(n_events).cast("long").alias("n_events"), *counts.columns)
 
 
 def cox_newton(
@@ -1021,32 +1080,16 @@ def cox_newton(
 
     Scale shape: ONE groupBy to the per-event-time grid (carrying
     leavers' counts), risk sets as total-minus-prefix windows over the
-    bounded grid, then each Newton step is a grid-sized aggregate plus
-    a 1-row broadcast crossJoin carrying the scalar beta — the cohort
-    is scanned once, never self-joined, and the iteration loop moves
-    grid-sized data only.
+    bounded grid, then every Newton step is one :func:`_binary_moments`
+    pass over the grid (:func:`_grid_runner`: on the driver when the
+    grid is bounded, per partition otherwise) — the cohort is scanned
+    once, never self-joined, and the iteration loop moves grid-sized
+    data only.
     """
     grid = _binary_event_grid(df, time_col, event_col, x_col)
-    beta = _newton_beta(df.sparkSession, grid, iterations)
-    fin = grid.crossJoin(F.broadcast(beta))
-    s1 = F.col("n1") * F.exp(F.col("beta"))
-    s0 = (F.col("n") - F.col("n1")) + s1
-    frac = s1 / s0
-    i_t = F.col("d") * frac * (1 - frac)
-    stats = fin.agg(
-        F.max("beta").alias("beta"),
-        F.sum(i_t).alias("__i"), F.sum("d").alias("n_events"))
     counts = df.groupBy().agg(F.count(F.lit(1)).alias("n_subjects"))
-    ok = F.col("beta").isNotNull() & (F.col("__i") > 0)
-    return stats.crossJoin(F.broadcast(counts)).select(
-        F.when(ok, F.round("beta", 6)).alias("beta"),
-        F.when(ok, F.round(F.exp("beta"), 6)).alias("hr"),
-        F.when(ok, F.round(1 / F.sqrt("__i"), 6)).alias("se"),
-        F.when(ok, F.round(F.col("beta") * F.col("beta") * F.col("__i"), 6))
-        .alias("wald_chi2"),
-        F.coalesce("n_events", F.lit(0)).alias("n_events"),
-        "n_subjects",
-    )
+    return _emit_binary_fit(
+        counts, *_binary_fit(_grid_runner(grid), iterations))
 
 
 def cox_newton_multi(
@@ -1115,6 +1158,46 @@ def cox_newton_multi(
                                          digits=digits)
 
 
+def _cox_multi_moments(rows, beta) -> tuple:
+    """The Cox multi-covariate moment kernel: score and information of
+    the Breslow partial likelihood at ``beta`` over grid rows
+    (t, n, d, x1..xd) sorted by (t, x1..xd), as the flat tuple
+    (U_1..U_d, I_ab for a <= b row-major, n_events). Each time's cells
+    are adjacent, accumulate in x order into S0/S1/S2, and the per-time
+    terms accumulate in time order (see :func:`cox_newton_multi`)."""
+    d = len(beta)
+    pairs = [(a, b) for a in range(d) for b in range(a, d)]
+    u = [0.0] * d
+    info = [0.0] * len(pairs)
+    n_events = 0
+    for _t, rows_t in itertools.groupby(rows, key=lambda r: r[0]):
+        s0 = 0.0
+        dd = 0
+        da = [0.0] * d
+        s1 = [0.0] * d
+        s2 = [0.0] * len(pairs)
+        for row in rows_t:
+            nc, dv = float(row[1]), int(row[2])
+            xv = [float(v) for v in row[3:3 + d]]
+            eta = 0.0
+            for i in range(d):
+                eta = eta + float(beta[i]) * xv[i]
+            ex = _exp(eta)
+            s0 += nc * ex
+            dd += dv
+            for a in range(d):
+                da[a] += xv[a] * dv
+                s1[a] += nc * xv[a] * ex
+            for k, (a, b) in enumerate(pairs):
+                s2[k] += nc * xv[a] * xv[b] * ex
+        for a in range(d):
+            u[a] += da[a] - dd * s1[a] / s0
+        for k, (a, b) in enumerate(pairs):
+            info[k] += dd * (s2[k] / s0 - (s1[a] / s0) * (s1[b] / s0))
+        n_events += dd
+    return (*u, *info, n_events)
+
+
 def cox_newton_multi_from_leavers(
     leav: DataFrame,
     d: int,
@@ -1128,8 +1211,6 @@ def cox_newton_multi_from_leavers(
     finalize_cox_multi), the same fold/recompute-on-read architecture
     as the KM twin. At-risk counts rebuild from the folded leavers via
     the cumulative window, never from subject history."""
-    import math
-
     import numpy as np
 
     from clinpy_spark.functions.cramer import solve2, solve3, var3_diag
@@ -1170,120 +1251,26 @@ def cox_newton_multi_from_leavers(
     )
     spark = leav.sparkSession
 
-    # ONE bounded probe of the (cell x event-time) grid — built
-    # distributed exactly as before. Cells are design-bounded, but the
-    # TIME axis comes from the data (a continuous time column at scale
-    # has ~one distinct time per event), so the driver-side fast path
-    # only engages when the grid is provably small; past the cap every
-    # Newton step stays a distributed grid aggregate (the pre-r13
-    # recurrence), so no data-sized collect can ever reach the driver.
-    raw = grid.select("__t", "__n", "__d", *xs).take(_GRID_DRIVER_MAX + 1)
-    driver_side = len(raw) <= _GRID_DRIVER_MAX
-    if driver_side:
-        # Deterministic reduction order BY CONSTRUCTION (r13 verdict
-        # #1): collect order depends on partition layout (core count,
-        # AQE), so the rows are sorted by (t, x1..xd) before any float
-        # touches them — within each time the cells accumulate in
-        # x-lexicographic order and times accumulate ascending. The
-        # oracle CTEs pin the identical order with DuckDB ordered
-        # aggregates (sum(... ORDER BY x1..xd) per time, ORDER BY t
-        # across times), so the two float streams are operand-for-
-        # operand identical, not merely within rounding distance.
-        g_rows = sorted(
-            ((r["__t"], float(r["__n"]), int(r["__d"]),
-              *[float(r[x]) for x in xs])
-             for r in raw),
-            key=lambda row: (row[0],) + row[3:])
-        by_t: dict = {}
-        for row in g_rows:
-            by_t.setdefault(row[0], []).append(row)
+    # The grid is built distributed; Newton steps then run
+    # _cox_multi_moments through _grid_runner. Cells are design-bounded
+    # but the TIME axis comes from the data (a continuous time column at
+    # scale has ~one distinct time per event), so past the cap the
+    # kernel runs per partition of a range partitioning on __t, which
+    # keeps each time's cells together. Either way the rows are sorted
+    # by (t, x1..xd) before any float touches them; the oracle CTEs pin
+    # the identical order with DuckDB ordered aggregates
+    # (sum(... ORDER BY x1..xd) per time, ORDER BY t across times), so
+    # the two float streams are operand-for-operand identical, not
+    # merely within rounding distance (r13 verdict #1).
+    run = _grid_runner(grid, key=["__t", *xs], cols=["__t", "__n", "__d", *xs],
+                       range_key=["__t"])
+    pairs = [(a, b) for a in range(d) for b in range(a, d)]
 
-    def _exp(v: float) -> float:
-        # mirror the distributed plan's F.exp: overflow propagates as
-        # inf -> nan moments -> NULL emission, never a driver crash
-        try:
-            return math.exp(v)
-        except OverflowError:
-            return math.inf
-
-    def moments_driver(beta):
-        if not g_rows:
+    def moments(beta):
+        *sums, n_events = run(_cox_multi_moments, beta)
+        if not n_events:
             return None, None, 0
-        u = [0.0] * d
-        info = {(a, b): 0.0 for a in range(d) for b in range(a, d)}
-        n_events = 0
-        for rows_t in by_t.values():
-            s0 = 0.0
-            dd = 0
-            da = [0.0] * d
-            s1 = [0.0] * d
-            s2 = {(a, b): 0.0 for a in range(d) for b in range(a, d)}
-            for row in rows_t:
-                nc, dv = row[1], row[2]
-                xv = row[3:3 + d]
-                eta = 0.0
-                for i in range(d):
-                    eta = eta + float(beta[i]) * xv[i]
-                ex = _exp(eta)
-                s0 += nc * ex
-                dd += dv
-                for a in range(d):
-                    da[a] += xv[a] * dv
-                    s1[a] += nc * xv[a] * ex
-                for a in range(d):
-                    for b in range(a, d):
-                        s2[(a, b)] += nc * xv[a] * xv[b] * ex
-            for a in range(d):
-                u[a] += da[a] - dd * s1[a] / s0
-            for a in range(d):
-                for b in range(a, d):
-                    info[(a, b)] += dd * (
-                        s2[(a, b)] / s0 - (s1[a] / s0) * (s1[b] / s0))
-            n_events += dd
-        return u, info, n_events
-
-    def moments_distributed(beta):
-        # the pre-r13 per-step grid aggregate: one Spark job per Newton
-        # step, grid-sized shuffle only — the scale-safe branch
-        eta = F.lit(0.0)
-        for i, x in enumerate(xs):
-            eta = eta + F.lit(float(beta[i])) * F.col(x)
-        ex = F.exp(eta)
-        nc = F.col("__n").cast("double")
-        pt_aggs = [F.sum(nc * ex).alias("s0"), F.sum("__d").alias("dd")]
-        pt_aggs += [F.sum(F.col(x) * F.col("__d")).alias(f"da{a}")
-                    for a, x in enumerate(xs)]
-        pt_aggs += [F.sum(nc * F.col(x) * ex).alias(f"s1_{a}")
-                    for a, x in enumerate(xs)]
-        pt_aggs += [
-            F.sum(nc * F.col(xs[a]) * F.col(xs[b]) * ex).alias(f"s2_{a}{b}")
-            for a in range(d) for b in range(a, d)
-        ]
-        pt = grid.groupBy("__t").agg(*pt_aggs)
-        g_aggs = [
-            F.sum(F.col(f"da{a}")
-                  - F.col("dd") * F.col(f"s1_{a}") / F.col("s0"))
-            .alias(f"u{a}")
-            for a in range(d)
-        ]
-        g_aggs += [
-            F.sum(F.col("dd") * (
-                F.col(f"s2_{a}{b}") / F.col("s0")
-                - (F.col(f"s1_{a}") / F.col("s0"))
-                * (F.col(f"s1_{b}") / F.col("s0"))
-            )).alias(f"i{a}{b}")
-            for a in range(d) for b in range(a, d)
-        ]
-        g_aggs += [F.sum("dd").alias("n_events")]
-        row = pt.agg(*g_aggs).collect()[0]
-        if row["n_events"] is None:
-            return None, None, 0
-        u = [float(row[f"u{a}"]) for a in range(d)]
-        info = {(a, b): float(row[f"i{a}{b}"])
-                for a in range(d) for b in range(a, d)}
-        return u, info, int(row["n_events"])
-
-    moments = moments_driver if driver_side else moments_distributed
+        return sums[:d], dict(zip(pairs, sums[d:])), n_events
 
     def step(beta, u, info):
         """One Newton update.  For d <= 3 the solve is EXPLICIT Cramer
@@ -1386,9 +1373,7 @@ def cox_newton_multi_from_leavers(
     # statistic per run — and the Cramer solve above already removed
     # the LAPACK-vs-oracle term entirely.
     def r5(x):
-        if digits is None:  # unrounded, for boundary-margin audits
-            return float(x)
-        return round(float(x), digits) + 0.0
+        return _round(x, digits)
 
     score_norm = 0.0
     for v in u:
@@ -1435,16 +1420,15 @@ def cox_ph_check(
     correlation is one aggregate of exact sums.
     """
     grid = _binary_event_grid(df, time_col, event_col, x_col)
-    beta = _newton_beta(df.sparkSession, grid, iterations)
-    j = grid.crossJoin(F.broadcast(beta))
-    s1 = F.col("n1") * F.exp(F.col("beta"))
+    beta = _binary_fit(_grid_runner(grid), iterations)[0]
+    b = F.lit(beta).cast("double")
+    s1 = F.col("n1") * F.exp(b)
     s0 = (F.col("n") - F.col("n1")) + s1
     r = F.col("d1") - F.col("d") * s1 / s0
     w_idx = Window.orderBy("__t")
-    rr = j.withColumn("__r", r).withColumn(
+    rr = grid.withColumn("__r", r).withColumn(
         "__k", F.row_number().over(w_idx).cast("double"))
     agg = rr.agg(
-        F.max("beta").alias("beta"),
         F.count(F.lit(1)).alias("n_times"),
         F.sum("d").alias("n_events"),
         F.sum("__k").alias("sk"),
@@ -1458,9 +1442,9 @@ def cox_ph_check(
     vk = nn * F.col("skk") - F.col("sk") * F.col("sk")
     vr = nn * F.col("srr") - F.col("sr") * F.col("sr")
     return agg.select(
-        F.when(F.col("beta").isNotNull(), F.round("beta", 6)).alias("beta"),
+        (b if beta is None else F.lit(_round(beta, 6))).alias("beta"),
         F.when(
-            F.col("beta").isNotNull() & (vk > 0) & (vr > 0),
+            b.isNotNull() & (vk > 0) & (vr > 0),
             F.round(cov / F.sqrt(vk * vr), 6),
         ).alias("rho_ph"),
         "n_times",
@@ -1621,13 +1605,14 @@ def cox_newton_stratified(
 
     The partial likelihood factorizes over strata, so the score and
     information are SUMS over the per-(stratum, event-time) grid of
-    the same hypergeometric-exponential terms — ``_newton_beta``
-    iterates unchanged over the union grid; only the grid construction
-    partitions its risk-set windows by stratum. Same oracle story as
+    the same hypergeometric-exponential terms — :func:`_binary_fit`
+    iterates unchanged over the union grid, accumulating in (stratum,
+    time) order; only the grid construction partitions its risk-set
+    windows by stratum. Same oracle story as
     ``cox_newton``: chained CTEs with PARTITION BY stratum windows.
 
     Scale shape: ONE groupBy to the (stratum, time) grid, per-stratum
-    total-minus-prefix windows, then grid-sized Newton aggregates — at
+    total-minus-prefix windows, then grid-sized Newton passes — at
     10k strata the grid is still |strata| x |event times| rows,
     nothing quadratic, one shuffle keyed by stratum.
     """
@@ -1657,29 +1642,11 @@ def cox_newton_stratified(
         .select("__st", "__t", "d", "d1", "n", "n1")
         .localCheckpoint(eager=False)
     )
-    beta = _newton_beta(df.sparkSession, grid, iterations)
-    fin = grid.crossJoin(F.broadcast(beta))
-    s1 = F.col("n1") * F.exp(F.col("beta"))
-    s0 = (F.col("n") - F.col("n1")) + s1
-    frac = s1 / s0
-    i_t = F.col("d") * frac * (1 - frac)
-    stats = fin.agg(
-        F.max("beta").alias("beta"),
-        F.sum(i_t).alias("__i"), F.sum("d").alias("n_events"))
     counts = df.groupBy().agg(
         F.count(F.lit(1)).alias("n_subjects"),
         F.countDistinct(stratum_col).alias("n_strata"))
-    ok = F.col("beta").isNotNull() & (F.col("__i") > 0)
-    return stats.crossJoin(F.broadcast(counts)).select(
-        F.when(ok, F.round("beta", 6)).alias("beta"),
-        F.when(ok, F.round(F.exp("beta"), 6)).alias("hr"),
-        F.when(ok, F.round(1 / F.sqrt("__i"), 6)).alias("se"),
-        F.when(ok, F.round(F.col("beta") * F.col("beta") * F.col("__i"), 6))
-        .alias("wald_chi2"),
-        F.coalesce("n_events", F.lit(0)).alias("n_events"),
-        "n_subjects",
-        "n_strata",
-    )
+    return _emit_binary_fit(counts, *_binary_fit(
+        _grid_runner(grid, key=("__st", "__t")), iterations))
 
 
 def finegray_leavers(
@@ -1714,9 +1681,9 @@ def _finegray_weighted_grid(leav: DataFrame) -> DataFrame:
     """The bounded per-event-time WEIGHTED risk-set grid from the
     leaver table: (__t, d, d1, n, n1) with n / n1 the IPCW-weighted
     risk-set sums (total / arm-1) — deliberately the same column names
-    as ``_binary_event_grid`` so ``_newton_beta`` and ``cox_newton``'s
-    finishing expressions apply verbatim (weights do not depend on
-    beta, so the grid is fit-invariant and built ONCE).
+    as ``_binary_event_grid`` so :func:`_binary_fit` and the score
+    kernel apply verbatim (weights do not depend on beta, so the grid
+    is fit-invariant and built ONCE).
 
     w_i(t) = 1 while T_i >= t; a competing-event subject keeps
     w_i(t) = G(t-)/G(T_i) afterwards (G = censoring KM over ALL
@@ -1819,9 +1786,9 @@ def _finegray_weighted_grid(leav: DataFrame) -> DataFrame:
 def _finegray_grid_rows_driver(leav: DataFrame):
     """Driver-side twin of :func:`_finegray_weighted_grid` for a
     BOUNDED leaver table: returns (grid_rows, n_subjects, n_competing)
-    with grid_rows = [(t, n, n1, d, d1)] sorted by t, or None when the
-    leaver table exceeds ``_GRID_DRIVER_MAX`` (callers then keep the
-    distributed window pipeline — r13 verdict #2 contract).
+    with grid_rows = [(n, n1, d, d1)] in ascending event-time order,
+    or None when the leaver table exceeds ``_GRID_DRIVER_MAX`` (callers
+    then build the distributed grid — r13 verdict #2 contract).
 
     The leaver table is per-(arm, time) — arms are contract-bounded
     (<= 8 levels) but the TIME axis is data-sized, hence the cap. The
@@ -1837,8 +1804,6 @@ def _finegray_grid_rows_driver(leav: DataFrame):
     ordered aggregates (sum(... ORDER BY x) per time, ORDER BY t
     across times). Expression shapes replicate the distributed
     column arithmetic operand-for-operand."""
-    import math
-
     raw = leav.select("__x", "__t", "__r", "__d1", "__d2", "__c").take(
         _GRID_DRIVER_MAX + 1)
     if len(raw) > _GRID_DRIVER_MAX:
@@ -1917,18 +1882,51 @@ def _finegray_grid_rows_driver(leav: DataFrame):
             v = sval[a][t]
             s0 += v
             s1 += v if a == 1 else 0.0
-        grid.append((t, s0, s1, agg[t][2], agg[t][3]))
+        grid.append((s0, s1, agg[t][2], agg[t][3]))
     return grid, total_r, n_competing
 
 
-def _finegray_counts(leav: DataFrame) -> DataFrame:
-    """1-row (n_subjects, n_competing) from the leaver table — every
-    subject leaves exactly once, so the leaver totals ARE the cohort."""
-    return leav.groupBy().agg(
-        F.sum("__r").cast("long").alias("n_subjects"),
+def _finegray_grid(leav: DataFrame):
+    """(run, counts) for the Fine-Gray readers: ``run`` evaluates a
+    grid kernel over the weighted grid (as :func:`_grid_runner` does)
+    and ``counts`` is the 1-row (n_competing, n_subjects). A bounded
+    leaver table builds both on the driver
+    (:func:`_finegray_grid_rows_driver`) and the kernels run over its
+    rows; past the cap the grid is built distributed
+    (:func:`_finegray_weighted_grid`) and the same kernels run per
+    partition."""
+    leav = leav.localCheckpoint(eager=False)
+    data = _finegray_grid_rows_driver(leav)
+    if data is not None:
+        rows, n_subjects, n_competing = data
+        counts = leav.sparkSession.range(1).select(
+            F.lit(n_competing).cast("long").alias("n_competing"),
+            F.lit(n_subjects).cast("long").alias("n_subjects"))
+        return (lambda kernel, *args: kernel(rows, *args)), counts
+    # every subject leaves exactly once, so the leaver totals ARE the
+    # cohort
+    counts = leav.groupBy().agg(
         F.coalesce(F.sum("__d2"), F.lit(0)).cast("long")
         .alias("n_competing"),
-    )
+        F.sum("__r").cast("long").alias("n_subjects"))
+    return _grid_runner(_finegray_weighted_grid(leav)), counts
+
+
+def _finegray_score_moments(rows) -> tuple:
+    """The Fine-Gray score kernel at beta = 0: (U, V, n_events) over
+    weighted grid rows (n, n1, d, d1, ...) in time order, xbar = n1/n:
+        U = sum_t [d1 - d * xbar]
+        V = sum_t d * (n - d)/(n - 1) * (xbar - xbar^2)   (0 if n <= 1)"""
+    u = 0.0
+    v = 0.0
+    n_events = 0
+    for n, n1, d, d1, *_ in rows:
+        xbar = n1 / n
+        u += d1 - d * xbar
+        v += (d * (n - d) / (n - 1) * (xbar - xbar * xbar)
+              if n > 1 else 0.0)
+        n_events += d
+    return u, v, n_events
 
 
 def finegray_score_from_leavers(
@@ -1938,59 +1936,18 @@ def finegray_score_from_leavers(
     table — the streaming read path (weights and weighted risk sets
     rebuild from the additive counters, never from subject history).
 
-    When the leaver table is bounded the grid AND the score reduce run
-    driver-side in the pinned deterministic order
-    (:func:`_finegray_grid_rows_driver`) and the row emits as literals;
-    past the cap the distributed window pipeline below runs unchanged."""
-    if not leav.isStreaming:
-        leav = leav.localCheckpoint(eager=False)
-    spark = leav.sparkSession
-    data = None if leav.isStreaming else _finegray_grid_rows_driver(leav)
-    if data is not None:
-        grid, n_subjects, n_competing = data
-        u = 0.0
-        v = 0.0
-        n_events = 0
-        for _t, n, n1, d, d1 in grid:
-            xbar = n1 / n
-            u += d1 - d * xbar
-            v += (d * (n - d) / (n - 1) * (xbar - xbar * xbar)
-                  if n > 1 else 0.0)
-            n_events += d
-
-        def r6(x):
-            if digits is None:
-                return float(x)
-            return round(float(x), digits) + 0.0
-
-        return spark.range(1).select(
-            (F.lit(r6(u * u / v)) if v > 0
-             else F.lit(None).cast("double")).alias("chi2"),
-            F.lit(r6(u)).alias("u"),
-            F.lit(n_events).cast("long").alias("n_events"),
-            F.lit(n_competing).cast("long").alias("n_competing"),
-            F.lit(n_subjects).cast("long").alias("n_subjects"),
-        )
-    per_t = _finegray_weighted_grid(leav)
-    xbar = F.col("n1") / F.col("n")
-    u_t = F.col("d1") - F.col("d") * xbar
-    v_t = F.when(
-        F.col("n") > 1,
-        F.col("d") * (F.col("n") - F.col("d"))
-        / (F.col("n") - 1) * (xbar - xbar * xbar),
-    ).otherwise(F.lit(0.0))
-    agg = per_t.agg(
-        F.sum(u_t).alias("__u"),
-        F.sum(v_t).alias("__v"),
-        F.sum("d").alias("n_events"),
-    )
-    return agg.crossJoin(F.broadcast(_finegray_counts(leav))).select(
-        F.when(
-            F.col("__v") > 0,
-            F.round(F.col("__u") * F.col("__u") / F.col("__v"), 6) + 0.0,
-        ).alias("chi2"),
-        (F.round("__u", 6) + 0.0).alias("u"),
-        F.coalesce("n_events", F.lit(0)).cast("long").alias("n_events"),
+    The score is one :func:`_finegray_score_moments` pass over the grid
+    of :func:`_finegray_grid` — on the driver in the pinned
+    deterministic order when the leaver table is bounded, per
+    partition past the cap — and the row emits as literals rounded to
+    ``digits`` (None: unrounded) on either branch."""
+    run, counts = _finegray_grid(leav)
+    u, v, n_events = run(_finegray_score_moments)
+    return counts.select(
+        (F.lit(_round(u * u / v, digits)) if v > 0
+         else F.lit(None).cast("double")).alias("chi2"),
+        F.lit(_round(u, digits)).alias("u"),
+        F.lit(n_events).cast("long").alias("n_events"),
         "n_competing", "n_subjects",
     )
 
@@ -2034,93 +1991,14 @@ def finegray_newton_from_leavers(
     leav: DataFrame, iterations: int = 3, digits: int | None = 6,
 ) -> DataFrame:
     """:func:`finegray_newton` from the folded leaver table — the
-    streaming read path.
-
-    When the leaver table is bounded the weighted grid, the Newton
-    steps, AND the finishing information sum all run driver-side in
-    the pinned deterministic order (:func:`_finegray_grid_rows_driver`;
-    the step arithmetic replicates :func:`_newton_beta`'s per-row
-    shapes operand-for-operand) and the row emits as literals; past
-    the cap the distributed pipeline below runs unchanged."""
-    import math
-
-    if not leav.isStreaming:
-        leav = leav.localCheckpoint(eager=False)
-    spark = leav.sparkSession
-    data = None if leav.isStreaming else _finegray_grid_rows_driver(leav)
-    if data is not None:
-        g_rows, n_subjects, n_competing = data
-        beta: float | None = 0.0
-        for _ in range(iterations):
-            if beta is None:
-                break
-            u = 0.0
-            i = 0.0
-            try:
-                eb = math.exp(beta)
-            except OverflowError:
-                eb = math.inf
-            for _t, n, n1, d, _d1x in g_rows:
-                s1v = n1 * eb
-                s0v = (n - n1) + s1v
-                frac = s1v / s0v
-                # operand association matches the oracle CTE text:
-                # u term is (d * s1e) / s0e, i term is (d*frac)*(1-frac)
-                u += _d1x - d * s1v / s0v
-                i += d * frac * (1 - frac)
-            beta = beta + u / i if (g_rows and i > 0) else None
-        # final information at beta-hat (the emitted se/wald inputs)
-        i_fin = 0.0
-        n_events = 0
-        if beta is not None:
-            try:
-                eb = math.exp(beta)
-            except OverflowError:
-                eb = math.inf
-            for _t, n, n1, d, _d1x in g_rows:
-                s1v = n1 * eb
-                frac = s1v / ((n - n1) + s1v)
-                i_fin += d * frac * (1 - frac)
-        for row in g_rows:
-            n_events += row[3]
-        ok = beta is not None and i_fin > 0
-
-        def r6(x):
-            if digits is None:
-                return float(x)
-            return round(float(x), digits) + 0.0
-
-        null_d = F.lit(None).cast("double")
-        return spark.range(1).select(
-            (F.lit(r6(beta)) if ok else null_d).alias("beta"),
-            (F.lit(r6(math.exp(beta))) if ok else null_d).alias("hr"),
-            (F.lit(r6(1 / math.sqrt(i_fin))) if ok else null_d).alias("se"),
-            (F.lit(r6(beta * beta * i_fin)) if ok else null_d)
-            .alias("wald_chi2"),
-            F.lit(n_events).cast("long").alias("n_events"),
-            F.lit(n_competing).cast("long").alias("n_competing"),
-            F.lit(n_subjects).cast("long").alias("n_subjects"),
-        )
-    grid = _finegray_weighted_grid(leav).localCheckpoint(eager=False)
-    beta = _newton_beta(spark, grid, iterations)
-    fin = grid.crossJoin(F.broadcast(beta))
-    s1 = F.col("n1") * F.exp(F.col("beta"))
-    s0 = (F.col("n") - F.col("n1")) + s1
-    frac = s1 / s0
-    i_t = F.col("d") * frac * (1 - frac)
-    stats = fin.agg(
-        F.max("beta").alias("beta"),
-        F.sum(i_t).alias("__i"), F.sum("d").alias("n_events"))
-    ok = F.col("beta").isNotNull() & (F.col("__i") > 0)
-    return stats.crossJoin(F.broadcast(_finegray_counts(leav))).select(
-        F.when(ok, F.round("beta", 6)).alias("beta"),
-        F.when(ok, F.round(F.exp("beta"), 6)).alias("hr"),
-        F.when(ok, F.round(1 / F.sqrt("__i"), 6)).alias("se"),
-        F.when(ok, F.round(F.col("beta") * F.col("beta") * F.col("__i"), 6))
-        .alias("wald_chi2"),
-        F.coalesce("n_events", F.lit(0)).cast("long").alias("n_events"),
-        "n_competing", "n_subjects",
-    )
+    streaming read path: :func:`_binary_fit` over the grid of
+    :func:`_finegray_grid` (on the driver in the pinned deterministic
+    order when the leaver table is bounded, per partition past the
+    cap), emitted by :func:`_emit_binary_fit` at ``digits`` (None:
+    unrounded) on either branch."""
+    run, counts = _finegray_grid(leav)
+    return _emit_binary_fit(counts, *_binary_fit(run, iterations),
+                            digits=digits)
 
 
 def finegray_newton(
@@ -2140,7 +2018,7 @@ def finegray_newton(
     grid (``_finegray_weighted_grid``) is built ONCE and every Newton
     step is the SAME bounded-grid recurrence ``cox_newton`` unrolls —
     s1 = n1 e^b, s0 = (n - n1) + n1 e^b over the weighted sums —
-    reusing ``_newton_beta`` verbatim. With no competing events the
+    reusing :func:`_binary_fit` verbatim. With no competing events the
     weighted sums ARE the integer risk sets and the fit equals
     ``cox_newton`` bit-exactly (property test). The recurrence is a
     closed deterministic function of the grid; the
@@ -2530,35 +2408,18 @@ def cox_newton_tv(
     Scale shape: two groupBys to grid-sized flow/event tables, one
     exclusive running window over the bounded pooled time grid
     (:func:`_binary_event_grid_tv`), then the shared
-    :func:`_newton_beta` loop — per step a grid-sized aggregate plus a
-    1-row broadcast beta. The episode table is scanned a bounded
-    number of times and never self-joined.
+    :func:`_binary_fit` loop — per step one grid-sized kernel pass. The
+    episode table is scanned a bounded number of times and never
+    self-joined.
     """
     grid = _binary_event_grid_tv(df, start_col, stop_col, event_col, x_col)
-    beta = _newton_beta(df.sparkSession, grid, iterations)
-    fin = grid.crossJoin(F.broadcast(beta))
-    s1 = F.col("n1") * F.exp(F.col("beta"))
-    s0 = (F.col("n") - F.col("n1")) + s1
-    frac = s1 / s0
-    i_t = F.col("d") * frac * (1 - frac)
-    stats = fin.agg(
-        F.max("beta").alias("beta"),
-        F.sum(i_t).alias("__i"), F.sum("d").alias("n_events"))
     counts = (
         df.filter(F.col(stop_col).cast("double")
                   > F.col(start_col).cast("double"))
         .groupBy().agg(F.count(F.lit(1)).alias("n_episodes"))
     )
-    ok = F.col("beta").isNotNull() & (F.col("__i") > 0)
-    return stats.crossJoin(F.broadcast(counts)).select(
-        F.when(ok, F.round("beta", 6)).alias("beta"),
-        F.when(ok, F.round(F.exp("beta"), 6)).alias("hr"),
-        F.when(ok, F.round(1 / F.sqrt("__i"), 6)).alias("se"),
-        F.when(ok, F.round(F.col("beta") * F.col("beta") * F.col("__i"), 6))
-        .alias("wald_chi2"),
-        F.coalesce("n_events", F.lit(0)).alias("n_events"),
-        "n_episodes",
-    )
+    return _emit_binary_fit(
+        counts, *_binary_fit(_grid_runner(grid), iterations))
 
 
 def km_weighted(

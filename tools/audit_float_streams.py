@@ -15,6 +15,7 @@ Usage:
 
 from __future__ import annotations
 
+import re
 import sys
 
 sys.path.insert(0, "/root/repo")
@@ -62,8 +63,41 @@ def _obs_fg(spark, sf_dir):
         .alias("x"))
 
 
+def _strip_round(sql: str, digits: int) -> str:
+    """Unwrap every ``round(expr, digits)`` call to ``(expr)``. The
+    call's closing parenthesis is found by depth matching (skipping
+    quoted literals), so another ``, digits)`` in the SQL — a substr
+    argument, a round to other digits — is left alone."""
+    call = re.compile(r"\bround\(", re.IGNORECASE)
+    suffix = f", {digits}"
+    pos = 0
+    while m := call.search(sql, pos):
+        depth, k, quote = 0, m.end() - 1, None
+        while True:
+            ch = sql[k]
+            if quote:
+                quote = None if ch == quote else quote
+            elif ch in "'\"":
+                quote = ch
+            elif ch == "(":
+                depth += 1
+            elif ch == ")":
+                depth -= 1
+                if depth == 0:
+                    break
+            k += 1
+        inner = sql[m.end():k]
+        if inner.endswith(suffix):
+            sql = (sql[:m.start()] + "(" + inner[:-len(suffix)] + ")"
+                   + sql[k + 1:])
+            pos = m.start() + 1  # nested round() calls inside expr
+        else:
+            pos = m.end()
+    return sql
+
+
 def _duck(sf_dir, sql, digits):
-    sql = sql.replace("round(", "(").replace(f", {digits})", ")")
+    sql = _strip_round(sql, digits)
     con = duckdb.connect()
     for t in STAR_TABLES:
         con.execute(

@@ -74,13 +74,12 @@ EXPECTED_UNBOUNDED = {
     "sim_hard_negatives",  # rank-window definition NEEDS the exact scan
                            # over the bounded probe set; the 100 TB path
                            # swaps in an ANN shortlist + identical window
-    "surv_finegray_score",  # event-time probe spine crossJoin vs the
+    "surv_finegray_score",  # past the driver-grid cap only: the
+                            # event-time probe spine crossJoin vs the
                             # <= 2-row LITERAL per-arm cell table (the
                             # bounded side is inlined literals, proven
-                            # constant-row by the shape gate) plus the
-                            # 1-row counts broadcast
-    "surv_finegray_beta",  # same literal cell spine + the 1-row Newton
-                           # beta broadcast cox_newton's loop carries
+                            # constant-row by the shape gate)
+    "surv_finegray_beta",  # same past-the-cap literal cell spine
     "dx_fleiss_kappa",  # crossJoin vs the ONE-ROW category-moment agg
                         # (p_e / p_j^3 sums) — linear in items
     "dx_kendall_tau",  # inequality join of the bounded joint grid vs
@@ -108,7 +107,7 @@ EXPECTED_UNBOUNDED = {
                        # broadcast back over the bounded stratum grid
     "dx_negbin",  # each Poisson/NB step crossJoins the bounded grid vs
                   # the 1-row (b0, b1[, alpha]) aggregate (same shape
-                  # as dx_poisson/surv_cox_beta)
+                  # as dx_poisson)
     "sim_cluster_quality",  # wss x bss x consts — three 1-row aggregates
     "a16_market_basket",  # crossJoin vs the 1-row basket-count constant
     "text_kmv_overlap",  # two k-length single-row sketches crossJoined —
@@ -154,12 +153,6 @@ EXPECTED_UNBOUNDED = {
     "surv_logrank_gehan",  # same logrank_weighted shape under the
                            # n(t) Gehan weighting — same 1-row cohort
                            # totals crossJoin
-    "surv_cox_beta",  # each Newton step crossJoins the bounded grid vs
-                      # the 1-row scalar-beta aggregate, plus the 1-row
-                      # n_subjects count (same shape as surv_cox_score)
-    "surv_cox_tv",  # same _newton_beta shape over the counting-process
-                    # flow grid: bounded-grid crossJoins vs the 1-row
-                    # beta and n_episodes aggregates
     "gx_king_kinship",  # the CONSTANT 200-row broadcast variant-range
                         # grid expansion (same shape as gx_ld_r2); the
                         # kinship pair join itself is a variant equi-join
@@ -182,9 +175,6 @@ EXPECTED_UNBOUNDED = {
                          # set (same declared shape as sim_topk_ivf's
                          # constant-side cross join; corpus streams
                          # linearly, 24 bytes/vector)
-    "surv_ph_check",  # Newton steps crossJoin the bounded grid vs the
-                      # 1-row scalar-beta aggregate (same shape as
-                      # surv_cox_beta)
     "text_textrank",  # crossJoin vs the 1-row node-count broadcast in
                       # every unrolled power step (pagerank shape)
     "e_seasonal_decompose",  # crossJoin vs the 1-row phase-mean
@@ -202,7 +192,7 @@ EXPECTED_UNBOUNDED = {
     "gx_tdt",  # the CONSTANT 200-row broadcast variant-range grid
                # expansion (same shape as gx_mendel)
     "dx_logistic",  # IRLS steps crossJoin the bounded per-x grid vs the
-                    # 1-row scalar-beta aggregate (surv_cox_beta shape)
+                    # 1-row scalar-beta aggregate
     "graph_assortativity",  # crossJoin vs the 1-row node-count aggregate
                             # (graph_triangle_stats scalar shape)
     "e_acf",  # crossJoins vs the 1-row series moments and the
@@ -219,9 +209,6 @@ EXPECTED_UNBOUNDED = {
                          # offset grid (dx_poisson shape)
     "curate_dsir_head",  # crossJoin vs the 1-row bucket-total aggregate
                          # (text_bm25 corpus-constants shape)
-    "surv_cox_strat",  # Newton steps crossJoin the bounded stratum-time
-                       # grid vs the 1-row scalar-beta aggregate
-                       # (surv_cox_beta shape)
     "gx_sfs",  # the CONSTANT 200-row broadcast variant-range grid
                # expansion + 1-row histogram-total crossJoin
     "e_pacf",  # same constant-side crossJoins as e_acf (1-row series
